@@ -1,4 +1,5 @@
-"""Seeded corpus for the benchmark: TPC-H-shaped tables plus nested order dumps.
+"""Seeded corpus for the benchmark: TPC-H-shaped tables, nested order dumps,
+a text corpus to curate, and the expected result of every request.
 
 Run once per seed, in its own process, before anything is timed:
 
@@ -12,27 +13,42 @@ It writes
   ``orders.jsonl`` (mongoexport shape: one Extended JSON v2 document a
   line): both hold the same ``DUMP_DOCS`` order documents with their
   lineitems embedded as a ``lines`` array, the ``documents`` workload's
-  inputs;
-- ``docs.parquet``: the generator's own pyarrow copy of those documents, the
-  truth that read and write outputs are checked against;
-- ``corpus.json``: rows, bytes and ``bytes_per_doc`` of every file.
-
-The module also holds the checker's own BSON reader and writer, so that the
-program's codec is never checked against itself, and the order-independent
-digests every check compares.
+  read inputs;
+- ``docs.parquet``: the generator's own pyarrow copy of the first
+  ``WRITE_DOCS`` of those documents, the ``documents`` workload's write
+  input;
+- ``texts.parquet`` and ``holdout.parquet``: ``N_TEXTS`` short text
+  documents (with exact and near duplicates, quality-gate failures and PII)
+  and a holdout slice, half of it copied from the corpus, for ``curate``;
+- ``corpus.json``: rows, bytes and ``bytes_per_doc`` of every file, the
+  seeded parameter points each op type draws from, and the expected result
+  of every point. DuckDB and this module's own BSON reader and writer make
+  the expectations, so the program is never checked against itself, and the
+  client that is measured holds no oracle.
 """
 
 from __future__ import annotations
 
 import argparse
 import datetime as dt
+import hashlib
 import json
+import multiprocessing
 import os
 import struct
+from concurrent.futures import ProcessPoolExecutor
 
 N_CUSTOMERS = 7_500
 N_ORDERS = 75_000
-DUMP_DOCS = 1_000
+DUMP_DOCS = 20_000
+#: the first WRITE_DOCS of them are the write input
+WRITE_DOCS = 5_000
+N_TEXTS = 3_000
+N_HOLDOUT = 60
+#: shingles in more documents than this are left out of decontamination
+MAX_DF = 100
+#: seeded parameter values per op type; each has its expected result
+BAND_POINTS = 16
 
 EPOCH = dt.datetime(1970, 1, 1)
 _DAY0 = (dt.date(1992, 1, 1) - dt.date(1970, 1, 1)).days
@@ -147,6 +163,73 @@ def _midnight(d: dt.date) -> dt.datetime:
     return dt.datetime(d.year, d.month, d.day)
 
 
+def make_texts(seed: int):
+    """The text corpus and the holdout slice, as (doc_id, text) tables.
+
+    Words are drawn from a seeded 400-word vocabulary with Zipf-like
+    weights, so a few shingles are common enough to hit the ``MAX_DF``
+    cap. About 5% of the documents copy an earlier one exactly and 5% copy
+    one with a tenth of the words changed; 3% carry many ``#`` symbols and
+    2% are made of long words, so the quality gate drops them, as it does
+    the documents under 20 words; 10% carry an email address, a phone
+    number or an IP address. Half the holdout copies a corpus document with
+    one word changed, so decontamination has documents to drop.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng([seed, 2])
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    vocab = ["".join(rng.choice(letters, int(rng.integers(2, 9)))) for _ in range(400)]
+    weights = 1.0 / np.arange(1, 401) ** 0.8
+    weights /= weights.sum()
+
+    def words(n: int) -> list:
+        return [vocab[i] for i in rng.choice(400, n, p=weights)]
+
+    def pii() -> str:
+        kind = rng.integers(0, 3)
+        if kind == 0:
+            return f"{vocab[rng.integers(400)]}@{vocab[rng.integers(400)]}.com"
+        if kind == 1:
+            return f"{rng.integers(200, 999)}-{rng.integers(200, 999)}-{rng.integers(1000, 9999)}"
+        return ".".join(str(x) for x in rng.integers(1, 255, 4))
+
+    texts: list[str] = []
+    for i in range(N_TEXTS):
+        r = rng.random()
+        if i and r < 0.05:
+            texts.append(texts[rng.integers(0, i)])
+            continue
+        if i and r < 0.10:
+            toks = texts[rng.integers(0, i)].split(" ")
+            for j in rng.choice(len(toks), max(1, len(toks) // 10), replace=False):
+                toks[j] = vocab[rng.integers(400)]
+        else:
+            toks = words(int(rng.integers(5, 150)))
+            if r < 0.13:
+                toks += ["#"] * (len(toks) // 5)
+            elif r < 0.15:
+                toks = ["".join(rng.choice(letters, 12)) for _ in toks]
+        if rng.random() < 0.10:
+            toks.insert(int(rng.integers(0, len(toks) + 1)), pii())
+        texts.append(" ".join(toks))
+
+    long_docs = [t for t in texts if len(t.split(" ")) >= 40]
+    holdout = []
+    for k in range(N_HOLDOUT):
+        if k % 2:
+            holdout.append(" ".join(words(int(rng.integers(30, 100)))))
+        else:
+            toks = long_docs[rng.integers(0, len(long_docs))].split(" ")
+            toks[rng.integers(0, len(toks))] = vocab[rng.integers(400)]
+            holdout.append(" ".join(toks))
+    table = pa.table({"doc_id": np.arange(N_TEXTS, dtype=np.int64), "text": texts})
+    hold = pa.table({"doc_id": np.arange(N_HOLDOUT, dtype=np.int64) + 1_000_000,
+                     "text": holdout})
+    return table, hold
+
+
 # ------------------------------------------------------------ BSON (checker)
 
 
@@ -179,13 +262,13 @@ def _bson_elem(key: bytes, v) -> bytes:
     raise TypeError(f"unsupported BSON value {type(v).__name__}")
 
 
-def bson_decode_all(data: bytes) -> list[dict]:
-    """Every document of a concatenated BSON stream (mongodump layout)."""
-    out, pos = [], 0
-    while pos < len(data):
-        doc, pos = _bson_doc(data, pos)
-        out.append(doc)
-    return out
+def bson_file_docs(path: str):
+    """The documents of a concatenated BSON file (mongodump layout), one at
+    a time, so a check holds one document, not the file."""
+    with open(path, "rb") as fh:
+        while head := fh.read(4):
+            (size,) = struct.unpack("<i", head)
+            yield _bson_doc(head + fh.read(size - 4), 0)[0]
 
 
 def _bson_doc(data: bytes, pos: int) -> tuple[dict, int]:
@@ -252,59 +335,165 @@ def _days(v) -> int:
     return (v.replace(tzinfo=None) - EPOCH).days
 
 
-def doc_digest_py(docs) -> dict:
-    """Digest of order documents given as Python dicts (re-read outputs)."""
-    d = dict.fromkeys(DOC_DIGEST_KEYS, 0)
+def doc_vector(doc: dict) -> list:
+    """One order document's share of the digest, in ``DOC_DIGEST_KEYS`` order."""
+    k = int(doc["_id"])
+    lines = doc["lines"]
+    return [
+        1, k, k * k,
+        round(doc["o_totalprice"] * 100),
+        _days(doc["o_orderdate"]),
+        int(doc["o_orderstatus"] == "F"),
+        len(doc["o_orderpriority"]),
+        len(lines),
+        sum(int(ln["l_quantity"]) for ln in lines),
+        sum(round(ln["l_extendedprice"] * 100) for ln in lines),
+        sum(_days(ln["l_shipdate"]) for ln in lines),
+        sum(len(ln["l_shipmode"]) for ln in lines),
+    ]
+
+
+def doc_digest(docs) -> list:
+    """Digest of order documents given as Python dicts, one at a time."""
+    total = [0] * len(DOC_DIGEST_KEYS)
     for doc in docs:
-        k = int(doc["_id"])
-        d["n"] += 1
-        d["id_sum"] += k
-        d["id_sq"] += k * k
-        d["price_cents"] += round(doc["o_totalprice"] * 100)
-        d["date_days"] += _days(doc["o_orderdate"])
-        d["status_f"] += doc["o_orderstatus"] == "F"
-        d["prio_len"] += len(doc["o_orderpriority"])
-        for ln in doc["lines"]:
-            d["n_lines"] += 1
-            d["qty"] += int(ln["l_quantity"])
-            d["ext_cents"] += round(ln["l_extendedprice"] * 100)
-            d["ship_days"] += _days(ln["l_shipdate"])
-            d["mode_len"] += len(ln["l_shipmode"])
-    return d
+        total = [a + b for a, b in zip(total, doc_vector(doc))]
+    return total
 
 
-def doc_digest_arrow(table) -> dict:
-    """The same digest over an Arrow table of order documents."""
-    import pyarrow.compute as pc
+def table_docs(table, rows: int = 2048):
+    """An Arrow table's rows as dicts, a batch at a time."""
+    for batch in table.to_batches(max_chunksize=rows):
+        yield from batch.to_pylist()
 
-    def isum(a) -> int:
-        v = pc.sum(a).as_py()
-        return int(v or 0)
 
-    def cents(a):
-        return pc.round(pc.multiply(a, 100.0)).cast("int64")
+def rows_digest(rows) -> dict:
+    """Digest of (doc_id, split, fingerprint) rows in any order."""
+    lines = sorted(f"{int(i)}\t{s}\t{fp}" for i, s, fp in rows)
+    return {"rows": len(lines),
+            "sha1": hashlib.sha1("\n".join(lines).encode()).hexdigest()}
 
-    def days(a):
-        return pc.divide(
-            a.cast("timestamp[us]").cast("int64"), 86_400_000_000
-        )
 
-    ids = table["_id"].cast("int64")
-    lines = pc.list_flatten(table["lines"])
-    return {
-        "n": table.num_rows,
-        "id_sum": isum(ids),
-        "id_sq": isum(pc.multiply(ids, ids)),
-        "price_cents": isum(cents(table["o_totalprice"])),
-        "date_days": isum(days(table["o_orderdate"])),
-        "status_f": isum(pc.equal(table["o_orderstatus"], "F").cast("int64")),
-        "prio_len": isum(pc.utf8_length(table["o_orderpriority"])),
-        "n_lines": len(lines),
-        "qty": isum(pc.struct_field(lines, "l_quantity").cast("int64")),
-        "ext_cents": isum(cents(pc.struct_field(lines, "l_extendedprice"))),
-        "ship_days": isum(days(pc.struct_field(lines, "l_shipdate"))),
-        "mode_len": isum(pc.utf8_length(pc.struct_field(lines, "l_shipmode"))),
-    }
+# ----------------------------------------------------------- expectations
+
+FIND_SQL = """
+SELECT count(*), sum(l_orderkey), sum(CAST(round(l_extendedprice * 100) AS BIGINT)),
+       sum(l_quantity), sum(length(l_shipmode))
+FROM lineitem WHERE l_extendedprice >= ?
+"""
+GROUP_SQL = """
+SELECT l_shipmode, count(*), sum(l_quantity), sum(l_extendedprice), avg(l_discount)
+FROM lineitem WHERE l_quantity <= ? GROUP BY l_shipmode ORDER BY l_shipmode
+"""
+GROUP_QTY = (24, 25, 26)
+RANK_CUT = 200
+PIPELINE_SQL = """
+SELECT c_mktsegment, count(*), sum(o_totalprice) FROM (
+  SELECT c_mktsegment, o_totalprice,
+         rank() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC) AS rk
+  FROM orders JOIN customer ON o_custkey = c_custkey
+  WHERE o_totalprice >= ? AND o_totalprice < ?)
+WHERE rk <= ? GROUP BY c_mktsegment ORDER BY c_mktsegment
+"""
+# curate without its fuzzy stage: Gopher quality gate, exact dedup (min id
+# per payload), decontamination against the holdout on word-trigram
+# Jaccard with shingles over MAX_DF documents left out, PII redaction and
+# the md5 split.
+_TOKS = "string_split(text, ' ')"
+_GRAMS = (f"list_distinct(list_transform(range(1, greatest(len({_TOKS}) - 1, 2)), "
+          f"i -> array_to_string({_TOKS}[i:i+2], ' ')))")
+CURATE_SQL = f"""
+WITH
+gate AS (
+  SELECT doc_id, text FROM (
+    SELECT doc_id, text, len({_TOKS}) AS n_tok,
+           (length(text) - len({_TOKS}) + 1) * 1.0 / len({_TOKS}) AS mwl,
+           length(regexp_replace(text, '[^#…]', '', 'g')) * 1.0 / len({_TOKS}) AS swr
+    FROM texts)
+  WHERE n_tok BETWEEN 20 AND 100000 AND mwl BETWEEN 2.0 AND 10.0 AND swr <= 0.1
+),
+keep_exact AS (SELECT MIN(doc_id) AS doc_id FROM gate GROUP BY md5(text)),
+e AS (SELECT gate.* FROM gate JOIN keep_exact USING (doc_id)),
+esh AS (SELECT doc_id, unnest({_GRAMS}) AS s FROM e),
+hsh AS (SELECT doc_id, unnest({_GRAMS}) AS s FROM holdout),
+esz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM esh GROUP BY doc_id),
+hsz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM hsh GROUP BY doc_id),
+hot AS (SELECT s FROM (SELECT * FROM esh UNION ALL SELECT * FROM hsh)
+        GROUP BY s HAVING COUNT(*) > {MAX_DF}),
+eposts AS (SELECT * FROM esh ANTI JOIN hot USING (s)),
+hposts AS (SELECT * FROM hsh ANTI JOIN hot USING (s)),
+inter AS (
+  SELECT a.doc_id AS id_l, b.doc_id AS id_r, CAST(COUNT(*) AS BIGINT) AS i
+  FROM eposts a JOIN hposts b ON a.s = b.s GROUP BY 1, 2
+),
+contaminated AS (
+  SELECT DISTINCT id_l AS doc_id
+  FROM inter JOIN esz ON id_l = esz.doc_id JOIN hsz ON id_r = hsz.doc_id
+  WHERE i * 1.0 / (esz.sz + hsz.sz - i) >= 0.8
+),
+d AS (SELECT e.* FROM e ANTI JOIN contaminated USING (doc_id)),
+final AS (
+  SELECT doc_id,
+    regexp_replace(regexp_replace(regexp_replace(text,
+      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '[PII]', 'g'),
+      '\\b[0-9]{{1,3}}\\.[0-9]{{1,3}}\\.[0-9]{{1,3}}\\.[0-9]{{1,3}}\\b', '[PII]', 'g'),
+      '\\b[0-9]{{3}}[-. ][0-9]{{3}}[-. ][0-9]{{4}}\\b', '[PII]', 'g') AS text
+  FROM d
+)
+SELECT doc_id,
+       CASE WHEN substring(md5('split' || CAST(doc_id AS VARCHAR)), 1, 4)
+                 < '{int(0.8 * 65536):04x}' THEN 'train'
+            WHEN substring(md5('split' || CAST(doc_id AS VARCHAR)), 1, 4)
+                 < '{int(0.9 * 65536):04x}' THEN 'val'
+            ELSE 'test' END AS split,
+       md5(text) AS fp
+FROM final
+"""
+
+
+def _points(sorted_vals, lo: float, hi: float) -> list:
+    """``BAND_POINTS`` values at the quantiles spread over [lo, hi]."""
+    n = len(sorted_vals) - 1
+    return [float(sorted_vals[round((lo + (hi - lo) * k / (BAND_POINTS - 1)) * n)])
+            for k in range(BAND_POINTS)]
+
+
+def doc_expectations(docs: list) -> dict:
+    """Expected digests of the seeded reads and of every write."""
+    import numpy as np
+
+    prices = np.array([d["o_totalprice"] for d in docs])
+    vectors = np.array([doc_vector(d) for d in docs], dtype=np.int64)
+    read = [[t, [int(x) for x in vectors[prices >= t].sum(axis=0)]]
+            for t in _points(np.sort(prices), 0.90, 0.91)]
+    return {"read": read, "write": doc_digest(docs[:WRITE_DOCS])}
+
+
+def sql_expectations(out: str) -> dict:
+    """Expected results of the seeded export requests and of curate, from
+    DuckDB over the corpus's parquet files."""
+    import duckdb
+    import numpy as np
+
+    db = duckdb.connect()
+    for name in ("customer", "orders", "lineitem", "texts", "holdout"):
+        db.execute(f"CREATE VIEW {name} AS SELECT * FROM "
+                   f"read_parquet('{os.path.join(out, name + '.parquet')}')")
+    ext = np.sort(db.execute("SELECT l_extendedprice FROM lineitem").fetchnumpy()
+                  ["l_extendedprice"])
+    find = [[t, [int(v) for v in db.execute(FIND_SQL, [t]).fetchone()]]
+            for t in _points(ext, 0.80, 0.81)]
+    group = {str(q): [list(r) for r in db.execute(GROUP_SQL, [q]).fetchall()]
+             for q in GROUP_QTY}
+    tot = np.sort(db.execute("SELECT o_totalprice FROM orders").fetchnumpy()["o_totalprice"])
+    pipeline = []
+    for lo in _points(tot, 0.40, 0.41):
+        hi = float(tot[min(len(tot) - 1, np.searchsorted(tot, lo) + len(tot) // 5)])
+        rows = db.execute(PIPELINE_SQL, [lo, hi, RANK_CUT]).fetchall()
+        pipeline.append([lo, hi, [list(r) for r in rows]])
+    curate = rows_digest(db.execute(CURATE_SQL).fetchall())
+    db.close()
+    return {"find": find, "group": group, "pipeline": pipeline, "curate": curate}
 
 
 # ------------------------------------------------------------------- main
@@ -316,27 +505,38 @@ def generate(seed: int, out: str) -> dict:
 
     os.makedirs(out, exist_ok=True)
     customer, orders, lineitem = make_tables(seed)
+    texts, holdout = make_texts(seed)
     files = {}
-    for name, t in (("customer", customer), ("orders", orders), ("lineitem", lineitem)):
+    for name, t in (("customer", customer), ("orders", orders), ("lineitem", lineitem),
+                    ("texts", texts), ("holdout", holdout)):
         path = os.path.join(out, f"{name}.parquet")
         pq.write_table(t, path)
         files[name] = {"rows": t.num_rows, "bytes": os.path.getsize(path)}
 
-    docs = nested_docs(orders, lineitem, DUMP_DOCS)
-    with open(os.path.join(out, "orders.bson"), "wb") as fh:
-        for doc in docs:
-            fh.write(bson_encode(doc))
-    with open(os.path.join(out, "orders.jsonl"), "w") as fh:
-        for doc in docs:
-            fh.write(json.dumps(_ext_json(doc), separators=(",", ":")) + "\n")
-    pq.write_table(pa.Table.from_pylist(docs), os.path.join(out, "docs.parquet"))
-    for name in ("orders.bson", "orders.jsonl", "docs.parquet"):
+    # another process computes the DuckDB expectations while this one
+    # builds the dumps
+    with ProcessPoolExecutor(1, mp_context=multiprocessing.get_context("spawn")) as pool:
+        sql = pool.submit(sql_expectations, out)
+        docs = nested_docs(orders, lineitem, DUMP_DOCS)
+        with open(os.path.join(out, "orders.bson"), "wb") as fh:
+            for doc in docs:
+                fh.write(bson_encode(doc))
+        with open(os.path.join(out, "orders.jsonl"), "w") as fh:
+            for doc in docs:
+                fh.write(json.dumps(_ext_json(doc), separators=(",", ":")) + "\n")
+        pq.write_table(pa.Table.from_pylist(docs[:WRITE_DOCS]),
+                       os.path.join(out, "docs.parquet"))
+        expect = {**doc_expectations(docs), **sql.result()}
+    for name, rows in (("orders.bson", len(docs)), ("orders.jsonl", len(docs)),
+                       ("docs.parquet", WRITE_DOCS)):
         size = os.path.getsize(os.path.join(out, name))
-        files[name] = {"rows": len(docs), "bytes": size,
-                       "bytes_per_doc": size / len(docs)}
-    meta = {"seed": seed, "files": files, "digest": doc_digest_py(docs)}
-    with open(os.path.join(out, "corpus.json"), "w") as fh:
+        files[name] = {"rows": rows, "bytes": size, "bytes_per_doc": size / rows}
+    meta = {"seed": seed, "files": files, "expect": expect}
+    # corpus.json is written last: its presence marks a complete corpus
+    tmp = os.path.join(out, "corpus.json.tmp")
+    with open(tmp, "w") as fh:
         json.dump(meta, fh, indent=1)
+    os.replace(tmp, os.path.join(out, "corpus.json"))
     return meta
 
 

@@ -1,6 +1,6 @@
 """Document-engine benchmark: one closed-loop client per workload.
 
-    python3 perfbench/run.py --workload documents --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload documents --seed 1 --seconds 10 --trace 0
 
 Run from the root of a source checkout (the directory holding
 ``mongo_arrow_spark/``). The corpus for a seed is generated once, in a
@@ -27,8 +27,10 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
 
-#: set-ups per run, after the untimed JVM start; ``setup_s`` is their median
-SETUP_REPEATS = 2
+#: set-ups per run, after the untimed JVM start; ``setup_s`` is their median,
+#: so the first set-up's one-off costs (class loading, the first Python
+#: worker) do not count
+SETUP_REPEATS = 3
 #: cores the local session uses, never more than the host has
 MAX_CORES = 4
 DRIVER_MEMORY = "2g"
@@ -124,10 +126,6 @@ def main() -> None:
         stop_session(spark, gateway_proc)
         fail(f"corpus generation for seed {args.seed} failed")
     bench = WORKLOADS[args.workload](corpus_dir, WORK, random.Random(args.seed), tracer)
-    # one untimed open pays the JVM's first-use costs (class loading, the
-    # first Python worker), so every timed set-up starts equally warm
-    register(spark)
-    bench.open(spark)
     setup, starts = [], []
     for _ in range(SETUP_REPEATS):
         spark.stop()
@@ -173,17 +171,23 @@ def main() -> None:
     bench.bytes = bench.byte_docs = 0
 
     lat = {op: [] for op in bench.ops}
-    docs, busy, cycle = 0, 0.0, 0
+    rates, busy, cycle = [], 0.0, 0
     give_up = time.perf_counter() + 3 * args.seconds + 30  # if requests keep failing
     # whole cycles, so every op type is timed equally often
     while busy < args.seconds and time.perf_counter() < give_up:
+        docs = cycle_busy = 0
         for op in bench.ops:
             n, dt = one(op, f"req-{cycle}-{op}")
             if dt is not None:
                 lat[op].append(dt)
-                busy += dt
+                cycle_busy += dt
             docs += n
+        busy += cycle_busy
+        rates.append(docs / cycle_busy if cycle_busy else 0.0)
         cycle += 1
+    # a cycle's documents over its request time; the median over cycles
+    # keeps one slow stretch of the host from moving the run's figure
+    docs_per_s = statistics.median(rates)
 
     correct = failed == 0 and all(lat.values())
     p50 = {op: 1000 * statistics.median(v) if v else 0.0 for op, v in lat.items()}
@@ -200,20 +204,16 @@ def main() -> None:
             "trace.spans": (len(tracer.spans), "count"),
             "trace.overhead_frac": (
                 len(tracer.spans) * tracer.cost_per_span_s() / max(busy, 1e-9), "ratio"),
-            "trace.docs_per_s": (docs / busy if busy else 0.0, "1/s"),
+            "trace.docs_per_s": (docs_per_s, "1/s"),
         }
         for i, op in enumerate(bench.ops, 1):
             metrics[f"op{i}.latency_p50_ms"] = (p50[op], "ms")
-        units = {"_ms": "ms", "_per_s": "1/s", "splits": "count",
-                 "bytes_written": "bytes", "files_written": "count"}
-        for name, value in probe_layers(spark, corpus_dir, WORK).items():
-            unit = next(u for suffix, u in units.items() if name.endswith(suffix))
-            metrics[name] = (value, unit)
+        metrics.update(probe_layers(spark, corpus_dir, WORK))
         tracer.dump(os.path.join(WORK, "trace", f"{args.workload}-{args.seed}.jsonl"))
     else:
         metrics = {
             "setup_s": (statistics.median(setup), "s"),
-            "docs_per_s": (docs / busy if busy else 0.0, "1/s"),
+            "docs_per_s": (docs_per_s, "1/s"),
             "bytes_per_doc": (bench.bytes / bench.byte_docs if bench.byte_docs else 0.0,
                               "bytes"),
             "peak_rss_mb": (resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, "MB"),

@@ -2,13 +2,17 @@
 
 A workload opens its collections (part of set-up), may prepare untimed
 state, and serves requests of a few op types. ``request`` returns the
-number of documents it returned or wrote and a ``check`` callable; the
-caller times the request alone and runs the check off the clock.
+number of documents it returned, wrote or curated and a ``check`` callable;
+the caller times the request alone and runs the check off the clock.
+
+Each op type draws its seeded parameter from a few points that the corpus
+generator fixed, and the check compares the result with the expectation
+the generator stored for that point. So the client runs no oracle, and
+its peak RSS is the program's.
 """
 
 from __future__ import annotations
 
-import bisect
 import json
 import os
 import shutil
@@ -20,7 +24,7 @@ class Workload:
     name = ""
     ops: tuple = ()
     #: untimed request cycles (every op type) before the timed loop
-    warmup_cycles = 2
+    warmup_cycles = 1
 
     def __init__(self, corpus_dir: str, work_dir: str, rng, tracer):
         self.dir = corpus_dir
@@ -29,6 +33,7 @@ class Workload:
         self.trace = tracer
         with open(os.path.join(corpus_dir, "corpus.json")) as fh:
             self.meta = json.load(fh)
+        self.expect = self.meta["expect"]
         #: ``bytes_per_doc`` = bytes / byte_docs, summed over timed requests
         self.bytes = self.byte_docs = 0
 
@@ -41,66 +46,71 @@ class Workload:
     def request(self, op: str):  # pragma: no cover - abstract
         raise NotImplementedError
 
-    def _band(self, sorted_vals, lo: float, hi: float) -> float:
-        """A seeded threshold at a quantile drawn from [lo, hi]."""
-        q = self.rng.uniform(lo, hi)
-        return float(sorted_vals[int(q * (len(sorted_vals) - 1))])
-
 
 # --------------------------------------------------------------- documents
 
 
-class Documents(Workload):
-    """Order documents in and out through the ``documents`` source.
+def curate_request(texts, holdout):
+    """The ``curate`` request: the curation pipeline without its fuzzy
+    stage (see README.md), as (doc_id, split, md5 of the text) rows."""
+    from pyspark.sql import functions as F
 
-    ``read.*``: load a dump with schema inference, apply a seeded ``find``
-    and materialize the result to Arrow. ``write.*``: write the same
-    documents, cached in memory, through ``api.write(format="documents")``
-    and re-read every output file in the check."""
+    from mongo_arrow_spark.operators.curate import curate
+
+    out = curate(texts, holdout, min_tokens=20, jaccard_threshold=None,
+                 max_df=corpus.MAX_DF, decontaminate_threshold=0.8, train=0.8, val=0.1)
+    return out.select("doc_id", "split", F.md5("text").alias("fp"))
+
+
+class Documents(Workload):
+    """Documents in and out, and curated.
+
+    ``read.*``: load an order dump through the ``documents`` source with
+    schema inference, apply a seeded ``find`` and materialize the result to
+    Arrow. ``write.*``: write the same orders, cached in memory, through
+    ``api.write(format="documents")``; the check re-reads every output
+    file. ``curate``: the curation pipeline over a text corpus and its
+    holdout slice."""
 
     name = "documents"
-    ops = ("read.bson", "read.jsonl", "write.jsonl", "write.bson")
+    ops = ("read.bson", "read.jsonl", "write.jsonl", "write.bson", "curate")
 
     def open(self, spark):
-        import pyarrow.parquet as pq
-
         self.spark = spark
         for fmt in ("bson", "jsonl"):
             with self.trace.span("sources.load"):
                 spark.read.format("documents").load(self._path(fmt))
-        self.truth = pq.read_table(os.path.join(self.dir, "docs.parquet"))
-        self.prices = sorted(self.truth["o_totalprice"].to_pylist())
+        self.texts = spark.read.parquet(os.path.join(self.dir, "texts.parquet"))
+        self.holdout = spark.read.parquet(os.path.join(self.dir, "holdout.parquet"))
         self.n = 0
 
     def prepare(self):
-        # the write input: the same documents from the generator's parquet
-        # copy (one file, so one partition, as one dump file is one split)
+        # the write input: the same orders from the generator's parquet copy
+        # (one file, so one partition, as one dump file is one split)
         self.df = self.spark.read.parquet(os.path.join(self.dir, "docs.parquet")).cache()
         self.df.count()
+        self.texts, self.holdout = self.texts.cache(), self.holdout.cache()
+        self.texts.count(), self.holdout.count()
 
     def _path(self, fmt: str) -> str:
         return os.path.join(self.dir, f"orders.{fmt}")
 
     def request(self, op):
+        if op == "curate":
+            return self._curate()
         kind, fmt = op.split(".")
         return self._read(fmt) if kind == "read" else self._write(fmt)
 
     def _read(self, fmt):
-        import pyarrow.compute as pc
-
         import mongo_arrow_spark as mas
 
-        t = self._band(self.prices, 0.49, 0.51)
+        t, want = self.rng.choice(self.expect["read"])
         with self.trace.span("sources.load"):
             df = self.spark.read.format("documents").load(self._path(fmt))
         with self.trace.span("api.find_arrow_all"):
             table = mas.find_arrow_all(df, {"o_totalprice": {"$gte": t}})
-
-        def check():
-            want = self.truth.filter(pc.greater_equal(self.truth["o_totalprice"], t))
-            return corpus.doc_digest_arrow(table) == corpus.doc_digest_arrow(want)
-
-        return self.meta["files"][f"orders.{fmt}"]["rows"], check
+        return (self.meta["files"][f"orders.{fmt}"]["rows"],
+                lambda: corpus.doc_digest(corpus.table_docs(table)) == want)
 
     def _write(self, fmt):
         import mongo_arrow_spark as mas
@@ -114,57 +124,67 @@ class Documents(Workload):
         self.bytes += sum(os.path.getsize(f) for f in files)
         self.byte_docs += res.inserted_count
 
+        def reread():
+            for f in files:
+                if fmt == "bson":
+                    yield from corpus.bson_file_docs(f)
+                else:
+                    with open(f, encoding="utf-8") as fh:
+                        yield from (json.loads(x) for x in fh if x.strip())
+
         def check():
             try:
-                docs = []
-                for f in files:
-                    with open(f, "rb") as fh:
-                        data = fh.read()
-                    if fmt == "bson":
-                        docs += corpus.bson_decode_all(data)
-                    else:
-                        docs += [json.loads(x) for x in data.splitlines() if x]
-                return (res.inserted_count == len(docs)
-                        and corpus.doc_digest_py(docs) == self.meta["digest"])
+                got = corpus.doc_digest(reread())
+                return got == self.expect["write"] and got[0] == res.inserted_count
             finally:
                 shutil.rmtree(out, ignore_errors=True)
 
         return res.inserted_count, check
 
+    def _curate(self):
+        with self.trace.span("operators.curate"):
+            table = curate_request(self.texts, self.holdout).toArrow()
+
+        def check():
+            rows = zip(*(table[c].to_pylist() for c in ("doc_id", "split", "fp")))
+            return corpus.rows_digest(rows) == self.expect["curate"]
+
+        return self.meta["files"]["texts"]["rows"], check
+
 
 # ------------------------------------------------------------------ export
 
-_FIND_PROJECTION = {
+FIND_PROJECTION = {
     "_id": 0, "l_orderkey": 1, "l_partkey": 1, "l_quantity": 1,
     "l_extendedprice": 1, "l_shipmode": 1,
 }
-_FIND_SQL = """
-SELECT count(*), sum(l_orderkey), sum(CAST(round(l_extendedprice * 100) AS BIGINT)),
-       sum(l_quantity), sum(length(l_shipmode))
-FROM lineitem WHERE l_extendedprice >= ?
-"""
-_PIPELINE_SQL = """
-SELECT c_mktsegment, count(*), sum(o_totalprice) FROM (
-  SELECT c_mktsegment, o_totalprice,
-         rank() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC) AS rk
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  WHERE o_totalprice >= ? AND o_totalprice < ?)
-WHERE rk <= ? GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
-_RANK_CUT = 200
-_GROUP_SQL = """
-SELECT l_shipmode, count(*), sum(l_quantity), sum(l_extendedprice), avg(l_discount)
-FROM lineitem WHERE l_quantity <= ? GROUP BY l_shipmode ORDER BY l_shipmode
-"""
 
 
-def _group(max_qty: int) -> list:
+def group_pipeline(max_qty: int) -> list:
     return [
         {"$match": {"l_quantity": {"$lte": max_qty}}},
         {"$group": {"_id": "$l_shipmode", "n": {"$sum": 1},
                     "qty": {"$sum": "$l_quantity"},
                     "revenue": {"$sum": "$l_extendedprice"},
                     "disc": {"$avg": "$l_discount"}}},
+        {"$sort": {"_id": 1}},
+    ]
+
+
+def rank_pipeline(lo: float, hi: float) -> list:
+    return [
+        {"$match": {"o_totalprice": {"$gte": lo, "$lt": hi}}},
+        {"$lookup": {"from": "customer", "localField": "o_custkey",
+                     "foreignField": "c_custkey", "as": "cust"}},
+        {"$unwind": "$cust"},
+        {"$setWindowFields": {
+            "partitionBy": "$cust.c_mktsegment",
+            "sortBy": {"o_totalprice": -1},
+            "output": {"rank": {"$rank": {}}},
+        }},
+        {"$match": {"rank": {"$lte": corpus.RANK_CUT}}},
+        {"$group": {"_id": "$cust.c_mktsegment", "n": {"$sum": 1},
+                    "revenue": {"$sum": "$o_totalprice"}}},
         {"$sort": {"_id": 1}},
     ]
 
@@ -183,56 +203,26 @@ def _rows_match(got: list, want: list) -> bool:
     return True
 
 
-def _pipeline(lo: float, hi: float) -> list:
+def _find_digest(frame) -> list:
+    """Count and column sums of a ``find`` result given as a pandas frame."""
     return [
-        {"$match": {"o_totalprice": {"$gte": lo, "$lt": hi}}},
-        {"$lookup": {"from": "customer", "localField": "o_custkey",
-                     "foreignField": "c_custkey", "as": "cust"}},
-        {"$unwind": "$cust"},
-        {"$setWindowFields": {
-            "partitionBy": "$cust.c_mktsegment",
-            "sortBy": {"o_totalprice": -1},
-            "output": {"rank": {"$rank": {}}},
-        }},
-        {"$match": {"rank": {"$lte": _RANK_CUT}}},
-        {"$group": {"_id": "$cust.c_mktsegment", "n": {"$sum": 1},
-                    "revenue": {"$sum": "$o_totalprice"}}},
-        {"$sort": {"_id": 1}},
-    ]
-
-
-def _find_digest_arrow(table) -> tuple:
-    import pyarrow.compute as pc
-
-    cents = pc.round(pc.multiply(table["l_extendedprice"], 100.0)).cast("int64")
-    return (
-        table.num_rows,
-        pc.sum(table["l_orderkey"]).as_py(),
-        pc.sum(cents).as_py(),
-        pc.sum(table["l_quantity"]).as_py(),
-        pc.sum(pc.utf8_length(table["l_shipmode"])).as_py(),
-    )
-
-
-def _find_digest_pandas(frame) -> tuple:
-    return (
         len(frame),
         int(frame["l_orderkey"].sum()),
         int((frame["l_extendedprice"] * 100).round().astype("int64").sum()),
         int(frame["l_quantity"].sum()),
         int(frame["l_shipmode"].str.len().sum()),
-    )
+    ]
 
 
 class Export(Workload):
     """Seeded MQL requests over parquet-backed collections, exported to
-    Arrow (``find_arrow_all``), pandas (``find_pandas_all``) or as an
-    aggregation (``aggregate_arrow_all``); checked against DuckDB."""
+    Arrow (``find_arrow_all``), pandas (``find_pandas_all``), NumPy
+    (``find_numpy_all``) or as an aggregation (``aggregate_arrow_all``)."""
 
     name = "export"
-    ops = ("arrow", "pandas", "group", "pipeline")
-    # the aggregations keep speeding up (JIT) for ~6 requests
-    warmup_cycles = 6
+    ops = ("arrow", "pandas", "numpy", "group", "pipeline")
+    # the aggregations keep speeding up (JIT) over the first requests
+    warmup_cycles = 3
 
     def open(self, spark):
         import mongo_arrow_spark as mas
@@ -243,64 +233,50 @@ class Export(Workload):
         self.lineitem = mas.Collection(tables["lineitem"], "lineitem", collections=tables)
         self.orders = mas.Collection(tables["orders"], "orders", collections=tables)
 
-    def prepare(self):
-        import duckdb
-        import pyarrow.parquet as pq
+    def _aggregate(self, coll, pipeline, want, fields):
+        with self.trace.span("api.aggregate_arrow_all"):
+            table = coll.aggregate_arrow_all(pipeline)
+        self.bytes += table.nbytes
+        self.byte_docs += table.num_rows
 
-        self.db = duckdb.connect()
-        for name in ("customer", "orders", "lineitem"):
-            path = os.path.join(self.dir, f"{name}.parquet")
-            self.db.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-        self.ext = sorted(pq.read_table(os.path.join(self.dir, "lineitem.parquet"),
-                                        columns=["l_extendedprice"])[0].to_pylist())
-        self.tot = sorted(pq.read_table(os.path.join(self.dir, "orders.parquet"),
-                                        columns=["o_totalprice"])[0].to_pylist())
+        def check():
+            got = [[r[f] for f in fields] for r in table.to_pylist()]
+            return _rows_match(got, want)
 
-    def _find_expected(self, t: float) -> tuple:
-        return tuple(int(v) for v in self.db.execute(_FIND_SQL, [t]).fetchone())
+        return table.num_rows, check
 
     def request(self, op):
         if op == "pipeline":
-            lo = self._band(self.tot, 0.40, 0.41)
-            hi = self.tot[min(len(self.tot) - 1, bisect.bisect_left(self.tot, lo)
-                              + len(self.tot) // 5)]
-            with self.trace.span("api.aggregate_arrow_all"):
-                table = self.orders.aggregate_arrow_all(_pipeline(lo, hi))
-            self.bytes += table.nbytes
-            self.byte_docs += table.num_rows
-
-            def check():
-                want = self.db.execute(_PIPELINE_SQL, [lo, hi, _RANK_CUT]).fetchall()
-                got = [(r["_id"], r["n"], r["revenue"]) for r in table.to_pylist()]
-                return _rows_match(got, want)
-
-            return table.num_rows, check
+            lo, hi, want = self.rng.choice(self.expect["pipeline"])
+            return self._aggregate(self.orders, rank_pipeline(lo, hi), want,
+                                   ("_id", "n", "revenue"))
         if op == "group":
-            max_qty = self.rng.choice((24, 25, 26))
-            with self.trace.span("api.aggregate_arrow_all"):
-                table = self.lineitem.aggregate_arrow_all(_group(max_qty))
-            self.bytes += table.nbytes
-            self.byte_docs += table.num_rows
+            qty = self.rng.choice(corpus.GROUP_QTY)
+            return self._aggregate(self.lineitem, group_pipeline(qty),
+                                   self.expect["group"][str(qty)],
+                                   ("_id", "n", "qty", "revenue", "disc"))
 
-            def check():
-                want = self.db.execute(_GROUP_SQL, [max_qty]).fetchall()
-                got = [(r["_id"], r["n"], r["qty"], r["revenue"], r["disc"])
-                       for r in table.to_pylist()]
-                return _rows_match(got, want)
+        import pandas as pd
 
-            return table.num_rows, check
-
-        t = self._band(self.ext, 0.80, 0.81)
+        t, want = self.rng.choice(self.expect["find"])
         query = {"l_extendedprice": {"$gte": t}}
+        with self.trace.span(f"api.find_{op}_all"):
+            result = getattr(self.lineitem, f"find_{op}_all")(
+                query, projection=FIND_PROJECTION)
         if op == "arrow":
-            with self.trace.span("api.find_arrow_all"):
-                table = self.lineitem.find_arrow_all(query, projection=_FIND_PROJECTION)
-            self.bytes += table.nbytes
-            self.byte_docs += table.num_rows
-            return table.num_rows, lambda: _find_digest_arrow(table) == self._find_expected(t)
-        with self.trace.span("api.find_pandas_all"):
-            frame = self.lineitem.find_pandas_all(query, projection=_FIND_PROJECTION)
-        return len(frame), lambda: _find_digest_pandas(frame) == self._find_expected(t)
+            self.bytes += result.nbytes
+            self.byte_docs += result.num_rows
+
+        def check():
+            if op == "arrow":
+                frame = result.to_pandas()
+            elif op == "numpy":
+                frame = pd.DataFrame(result)
+            else:
+                frame = result
+            return _find_digest(frame) == want
+
+        return len(result["l_orderkey"]), check
 
 
 WORKLOADS = {w.name: w for w in (Documents, Export)}
